@@ -45,11 +45,18 @@ object Bench {
     // toRdd executes the EXACT physical plan of the query as written
     // (every column materialized, like the parquet sink Verify uses)
     // and counts rows without collecting them to the driver.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A query that throws yields None: timing it to the exception would
+    // report it as a fast success. It goes to the `failed` list instead.
+    def timeOnce(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"bench: $name failed: $e")
+          None
+      }
     }
     // rep-major order (full suite, then the next rep of the full suite):
     // a transient co-resident JVM then contaminates one rep of many
@@ -61,24 +68,27 @@ object Bench {
       .filter(_.nonEmpty)
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n)))
-    val samples: Map[String, Seq[Double]] = {
+    val samples: Map[String, Seq[Option[Double]]] = {
       val runs = (1 to reps).map { _ =>
-        names.map(n => n -> timeOnce(SparkEntry.queries(n))).toMap
+        names.map(n => n -> timeOnce(n)).toMap
       }
       names.map(n => n -> runs.map(_(n))).toMap
     }
+    // a query that failed in any rep is left out of medians and totals
+    val (timed, failed) = names.partition(n => samples(n).forall(_.isDefined))
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val med = names.map(n => n -> median(samples(n)))
-    val mins = names.map(n => n -> samples(n).min)
+    val med = timed.map(n => n -> median(samples(n).flatten))
+    val mins = timed.map(n => n -> samples(n).flatten.min)
     def fmt(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = med.map(_._2).sum
     val totalMin = mins.map(_._2).sum
     val perQ = if (med.nonEmpty) total / med.size else 0.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"cpus":"$cpus","total_min":$totalMin,"queries":${fmt(med)},"queries_min":${fmt(mins)},"sf":"$sfDir"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"cpus":"$cpus","total_min":$totalMin,"queries":${fmt(med)},"queries_min":${fmt(mins)},"failed":$failedJson,"sf":"$sfDir"}"""
     // Persist the FULL per-query JSON to files: the driver's log capture
     // keeps only the last ~2000 chars of stdout, so the ~14 KB full line
     // can never survive in BENCH_r{N}.json (r09/r10 both arrived with
@@ -94,7 +104,7 @@ object Bench {
       // the round's regression baseline with a 2-query fragment. Belt
       // AND suspenders (a stale-classpath subset run clobbered it in
       // r11 despite the env guard): also require every registered
-      // query to be present in this run's results.
+      // query to be present in this run's results (timed or failed).
       //
       // r16 (VERDICT r15 "What's wrong" #1): the driver's 8-core
       // scaling run is ALSO a full run and clobbered the 32-core
@@ -103,7 +113,7 @@ object Bench {
       // only when the run matches the bench contract's main core count
       // (SPARK_GRAFT_BENCH_MAIN_CPUS, default 32 = the driver's main
       // bench; the low-core scaling pass no longer rewrites it).
-      if (only.isEmpty && med.size == SparkEntry.queries.size) {
+      if (only.isEmpty && names.size == SparkEntry.queries.size) {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"BENCH_full_c$cpus.json"), bytes)
         val mainCpus =
@@ -119,7 +129,7 @@ object Bench {
     // the slowest-15 per-query medians — the part of the regression signal
     // that matters most — and a pointer to the full artifact.
     val slow = med.sortBy(-_._2).take(15)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"total_min":$totalMin,"queries":${fmt(slow)},"queries_full":"BENCH_full.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"total_min":$totalMin,"queries":${fmt(slow)},"failed":$failedJson,"queries_full":"BENCH_full.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -122,9 +122,15 @@ object PipelineRunner {
 
   /** Write the sink stage. `avro` goes through [[AvroSink]] (real Avro
     * container files via avro-core — no spark-avro datasource in this
-    * build). */
+    * build).
+    *
+    * At most 32 files, and the plan executes once: `coalesce(32)` never
+    * shuffles and keeps k ≤ 32 partitions as k, so it writes what
+    * `coalesce(min(k, 32))` would. Do not read k through `df.rdd` here:
+    * under AQE that executes the scan and map stage in a query execution
+    * of its own, and the write then executes them again. */
   def writeSink(df: DataFrame, s: SinkStage): Unit = {
-    val coalesced = df.coalesce(math.min(df.rdd.getNumPartitions, 32))
+    val coalesced = df.coalesce(32)
     s.format match {
       case "avro" => AvroSink.write(coalesced, s.path)
       case "csv" => coalesced.write.mode("overwrite").option("header", true).csv(s.path)
@@ -138,7 +144,10 @@ object PipelineRunner {
     * also what was written; errors feed an `_errors` sibling directory in
     * send-to-error-port mode). The error write is gated on the CONFIG,
     * not on an emptiness probe — `errors.isEmpty` would re-execute the
-    * whole aggregation just to test it, a full extra pass at scale. */
+    * whole aggregation just to test it, a full extra pass at scale.
+    * Each write scans the input once, but in send-to-error-port mode the
+    * two writes are separate plans, so the aggregate they share is still
+    * computed twice. */
   def run(spark: SparkSession, json: String,
           macros: Map[String, String] = Map.empty): PivotResult = {
     val p = parse(json, macros)
